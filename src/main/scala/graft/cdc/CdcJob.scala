@@ -49,20 +49,57 @@ object CdcJob {
   /** Parse binlog text files into a change-event DataFrame. */
   def parse(spark: SparkSession, path: String,
       includeDdl: Boolean = false): DataFrame =
-    parsePaths(spark, Seq(path), includeDdl)
+    read(spark, Seq(path), binary = false, includeDdl)
 
-  private[cdc] def parsePaths(spark: SparkSession, paths: Seq[String],
-      includeDdl: Boolean, ddlOnly: Boolean = false): DataFrame = {
+  /** The batch reader for both input formats: one task per file —
+    * `wholetext` text keyed by `input_file_name()`, or `binaryFile`
+    * bytes keyed by `path` (the `file` strings order the output and
+    * key the schema timelines, so each format keeps its source). */
+  private[graft] def read(spark: SparkSession, paths: Seq[String],
+      binary: Boolean, includeDdl: Boolean,
+      ddlOnly: Boolean = false): DataFrame = {
     import spark.implicits._
     if (paths.isEmpty) return projectEvents(spark.emptyDataset[RawChange].toDF())
-    projectEvents(
-      spark.read.option("wholetext", "true").text(paths: _*)
-        .select(input_file_name().as("file"), col("value"))
-        .as[(String, String)]
-        .flatMap { case (file, text) =>
-          BinlogFsm.parse(file, text.linesIterator, includeDdl, ddlOnly)
+    val files =
+      if (binary)
+        spark.read.format("binaryFile").option("pathGlobFilter", "*")
+          .load(paths: _*).select(col("path"), col("content"))
+      else
+        spark.read.option("wholetext", "true").text(paths: _*)
+          .select(input_file_name().as("file"), col("value"))
+    decode(files, binary, includeDdl, ddlOnly)
+  }
+
+  /** The decode stage the batch and stream readers share: a (file,
+    * content) frame — text or bytes per `binary` — through BinlogFsm or
+    * BinlogBinary, then `projectEvents`. Binary header datetimes render
+    * in the session time zone (BinlogBinary.parseBytes's `zone`).
+    * `skipBefore`: a file whose PREVIOUS_GTIDS header proves the whole
+    * set executed before it (S ⊆ P) is skipped at header cost — the
+    * stream's stand-in for GtidPrune, which cannot pre-list a growing
+    * directory. */
+  private[graft] def decode(files: DataFrame, binary: Boolean,
+      includeDdl: Boolean, ddlOnly: Boolean = false,
+      skipBefore: Option[GtidSet.Set] = None): DataFrame = {
+    val spark = files.sparkSession
+    import spark.implicits._
+    def stale(header: => Option[GtidSet.Set]): Boolean =
+      skipBefore.exists(s => header.exists(p => GtidSet.isSubset(s, p)))
+    val changes =
+      if (binary) {
+        val zoneId = spark.conf.get("spark.sql.session.timeZone",
+          java.time.ZoneId.systemDefault().getId)
+        files.as[(String, Array[Byte])].flatMap { case (file, bytes) =>
+          if (stale(graft.sources.BinlogBinary.headerPrevGtids(bytes))) Nil
+          else graft.sources.BinlogBinary.parseBytes(file, bytes, includeDdl,
+            java.time.ZoneId.of(zoneId), ddlOnly)
         }
-        .toDF())
+      } else
+        files.as[(String, String)].flatMap { case (file, text) =>
+          if (stale(BinlogFsm.headerPrevGtids(text.linesIterator))) Iterator.empty
+          else BinlogFsm.parse(file, text.linesIterator, includeDdl, ddlOnly)
+        }
+    projectEvents(changes.toDF())
   }
 
   /** O16–O18 + O3 filters — plain Catalyst predicates, pushed before
@@ -179,47 +216,65 @@ object CdcJob {
     rendered0
   }
 
-  /** Full pipeline: parse → filter → render. */
-  def run(spark: SparkSession, path: String, catalog: DataFrame,
-      cfg: CdcConfig = CdcConfig()): DataFrame = {
-    // schema evolution must SEE the log's DDL even when the user
-    // didn't ask for DDL in the output
+  /** The DDL rule of both modes: the parse sees DDL whenever a schema
+    * timeline folds over it, the output keeps DDL only under
+    * `--include-ddl`. Filters apply before the drop; the timeline
+    * itself folds over the PRE-filter stream (user filters narrow the
+    * output, never the schema history events resolve against). */
+  private[graft] def outputEvents(parsed: DataFrame, cfg: CdcConfig,
+      timeline: Boolean): DataFrame = {
+    val filtered = applyFilters(parsed, cfg)
+    if (timeline && !cfg.includeDdl) filtered.filter(col("op") =!= "ddl")
+    else filtered
+  }
+
+  /** The batch pipeline up to rendering: format → GTID prune → parse →
+    * schema timelines → filters → DDL drop. `cfg.format` picks the
+    * decoder (`auto` sniffs the magic, BinlogBinary.isBinlog). Returns
+    * the output events and, under `--evolve-schema`, the timelines to
+    * render them against. */
+  def events(spark: SparkSession, path: String, catalog: DataFrame,
+      cfg: CdcConfig): (DataFrame, Option[SchemaEvolve.Timelines]) = {
+    val binary = cfg.format match {
+      case "binary" => true
+      case "text" => false
+      case _ => graft.sources.BinlogBinary.isBinlog(spark, path)
+    }
     val parseDdl = cfg.includeDdl || cfg.evolveSchema
     // GTID seek, not scan (GtidPrune): with --include-gtids, files whose
     // PREVIOUS_GTIDS headers prove them disjoint from the requested set
     // are dropped from the read list before any decode work.
-    val (events, prunedOut) = cfg.includeGtids match {
+    val (parsed, prunedOut) = cfg.includeGtids match {
       case Some(spec) =>
         val retained = GtidPrune.prune(spark, path, spec)
         val all = GtidPrune.listFiles(spark, path).map(_.toString)
-        (parsePaths(spark, retained, parseDdl),
-          all.filterNot(retained.toSet))
-      case None => (parse(spark, path, parseDdl), Nil)
+        (read(spark, retained, binary, parseDdl), all.filterNot(retained.toSet))
+      case None => (read(spark, Seq(path), binary, parseDdl), Nil)
     }
-    // timelines fold over the PRE-filter stream: user filters narrow
-    // the output, never the schema history events resolve against.
     // With GTID pruning active the timeline must ALSO see ALTERs in
     // the pruned (earlier, GTID-disjoint) files — the base catalog
     // contract is "schema at log start", not "at the pruned read-list
     // start" — so the fold additionally parses the pruned-out files
-    // in the FSM's ddlOnly fast path (row-image lines — the dominant
-    // volume — are skipped at the line level, so pruning's decode
-    // saving is kept; retained files are never read twice).
+    // in the decoders' ddlOnly fast path (row images — the dominant
+    // volume — are skipped, so pruning's decode saving is kept;
+    // retained files are never read twice).
     val evolved =
       if (cfg.evolveSchema) {
         val timelineEvents =
-          if (prunedOut.isEmpty) events
-          else events.unionByName(
-            parsePaths(spark, prunedOut, includeDdl = true, ddlOnly = true)
+          if (prunedOut.isEmpty) parsed
+          else parsed.unionByName(
+            read(spark, prunedOut, binary, includeDdl = true, ddlOnly = true)
               .filter(col("op") === "ddl"))
         Some(SchemaEvolve.timelines(timelineEvents, catalog))
       } else None
-    val filtered = applyFilters(events, cfg)
-    val outEvents =
-      if (cfg.evolveSchema && !cfg.includeDdl)
-        filtered.filter(col("op") =!= "ddl")
-      else filtered
-    render(outEvents, catalog, cfg, evolved = evolved)
+    (outputEvents(parsed, cfg, cfg.evolveSchema), evolved)
+  }
+
+  /** Full pipeline: `events` → render. */
+  def run(spark: SparkSession, path: String, catalog: DataFrame,
+      cfg: CdcConfig = CdcConfig()): DataFrame = {
+    val (evs, evolved) = events(spark, path, catalog, cfg)
+    render(evs, catalog, cfg, evolved = evolved)
   }
 
   /** SCD type-2 dimension history at GENERIC image grain — the

@@ -247,37 +247,6 @@ object CdcMain {
       .write.mode("overwrite").partitionBy("p_db", "p_table").parquet(dir)
   }
 
-  private[graft] def writeEventLake(spark: SparkSession, binlog: String,
-      binary: Boolean, cfg: CdcConfig, dir: String): Unit = {
-    val ev = if (binary)
-      graft.sources.BinlogBinary.parse(spark, binlog, cfg.includeDdl)
-    else CdcJob.parse(spark, binlog, cfg.includeDdl)
-    writeEventLake(CdcJob.applyFilters(ev, cfg), dir)
-  }
-
-  /** `--format auto`: does the first file under `path` open with the
-    * binlog magic (0xFE 'b' 'i' 'n')? Reads 4 bytes of ONE file via
-    * the Hadoop filesystem (works for local paths and cluster stores
-    * alike); a rotated directory is probed by its lexicographically
-    * first file — binlog directories are homogeneous by contract. */
-  private[graft] def sniffBinary(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val st = fs.getFileStatus(p)
-    val first =
-      if (st.isDirectory) {
-        val files = fs.listStatus(p).filter(_.isFile).map(_.getPath)
-        if (files.isEmpty) return false
-        files.minBy(_.getName)
-      } else p
-    val in = fs.open(first)
-    try {
-      val b = new Array[Byte](4)
-      val n = in.read(b, 0, 4)
-      n == 4 && b(0) == 0xFE.toByte && b(1) == 'b' && b(2) == 'i' && b(3) == 'n'
-    } finally in.close()
-  }
-
   def main(args: Array[String]): Unit = {
     // like the reference: empty args or --help → usage, exit 1
     // (main.py:18-23)
@@ -304,31 +273,9 @@ object CdcMain {
         Catalog.fromJdbc(spark, url, catalogSrc.jdbcUser, catalogSrc.jdbcPassword)
       case (None, None) => Catalog.fixture(spark)
     }
-    val binary = cfg.format match {
-      case "binary" => true
-      case "text" => false
-      case _ => sniffBinary(spark, binlog)
-    }
-    // Parse + filter ONCE and share the event frame between the two
-    // sinks — with both --output-parquet and -o the binlog used to be
-    // decoded twice (ADVICE r9). Cache only when both are live.
-    // --evolve-schema (r14 fix: the flag used to set cfg and then be
-    // IGNORED by this inline pipeline — the CLI's flagship fix
-    // no-op'd): the parse must SEE DDL even when the output excludes
-    // it, timelines fold over the PRE-filter stream, and DDL leaves
-    // the output again unless --include-ddl asked for it.
-    val parseDdl = cfg.includeDdl || cfg.evolveSchema
-    val parsed =
-      if (binary) graft.sources.BinlogBinary.parse(spark, binlog, parseDdl)
-      else CdcJob.parse(spark, binlog, parseDdl)
-    val evolved =
-      if (cfg.evolveSchema) Some(SchemaEvolve.timelines(parsed, catalog))
-      else None
-    val filtered = CdcJob.applyFilters(parsed, cfg)
-    val events =
-      if (cfg.evolveSchema && !cfg.includeDdl)
-        filtered.filter(org.apache.spark.sql.functions.col("op") =!= "ddl")
-      else filtered
+    // the batch pipeline up to rendering (CdcJob.events), shared by
+    // every sink so the binlog decodes once; cached when several are live
+    val (events, evolved) = CdcJob.events(spark, binlog, catalog, cfg)
     val sinks = Seq(outParquet, outScd2, out).count(_.nonEmpty)
     val shared = if (sinks > 1) events.cache() else events
     // --output-parquet: the event-lake sink — filtered change EVENTS

@@ -46,29 +46,32 @@ object GtidPrune {
     else Seq(p)
   }
 
-  /** Header-only PREVIOUS_GTIDS read of one file (binary or text). */
-  private[cdc] def headerOf(spark: SparkSession, p: Path): Option[GtidSet.Set] = {
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
+  /** The first (up to) `n` bytes of file `p`. */
+  private[graft] def readHead(spark: SparkSession, p: Path, n: Int): Array[Byte] = {
+    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
     try {
-      val buf = new Array[Byte](HeaderBytes)
+      val buf = new Array[Byte](n)
       var read = 0
-      var n = 0
-      while (n >= 0 && read < buf.length) {
-        n = in.read(buf, read, buf.length - read)
-        if (n > 0) read += n
+      var k = 0
+      while (k >= 0 && read < n) {
+        k = in.read(buf, read, n - read)
+        if (k > 0) read += k
       }
-      val head = java.util.Arrays.copyOf(buf, read)
-      if (read >= 4 && head(0) == 0xFE.toByte && head(1) == 'b' &&
-          head(2) == 'i' && head(3) == 'n')
+      java.util.Arrays.copyOf(buf, read)
+    } finally in.close()
+  }
+
+  /** Header-only PREVIOUS_GTIDS read of one file (binary or text). */
+  private[cdc] def headerOf(spark: SparkSession, p: Path): Option[GtidSet.Set] =
+    try {
+      val head = readHead(spark, p, HeaderBytes)
+      if (graft.sources.BinlogBinary.hasMagic(head))
         graft.sources.BinlogBinary.headerPrevGtids(head)
       else
         BinlogFsm.headerPrevGtids(
           new String(head, java.nio.charset.StandardCharsets.UTF_8)
             .linesIterator)
     } catch { case _: java.io.IOException => None }
-    finally in.close()
-  }
 
   /** The subset of files under `path` that can contain events of
     * `includeSpec` — the rest are never opened again (the spec asserts

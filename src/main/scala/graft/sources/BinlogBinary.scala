@@ -2,7 +2,6 @@ package graft.sources
 
 import graft.cdc.{CdcJob, RawChange}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import scala.collection.mutable
 
 /** Binary MySQL binlog reader (format v4) — removes the engine's one
@@ -242,16 +241,21 @@ object BinlogBinary {
     (if (positive) "" else "-") + ip + (if (scale > 0) "." + fb else "")
   }
 
-  /** Decode one binlog file's bytes into change events. Eager per
-    * file (a rotated binlog file is bounded by rotate size — the
-    * task already holds the bytes).
-    *
-    * `zone` is the zone used to render header datetimes (and thus what
-    * `--start/stop-datetime` filters compare against). Real
-    * `mysqlbinlog` prints the SERVER's local time; the text path
-    * captures that output verbatim, so to match it on a non-UTC server
-    * pass that server's zone here (the `parse` entry point wires the
-    * Spark session timezone, which defaults to UTC in this engine). */
+  /** The binlog magic 0xFE 'b' 'i' 'n' — the one test that tells a raw
+    * `.binlog` file from `mysqlbinlog -vv` text (decode guard, GTID
+    * header read, `--format auto`). */
+  def hasMagic(head: Array[Byte]): Boolean =
+    head.length >= 4 && head(0) == 0xFE.toByte && head(1) == 'b' &&
+      head(2) == 'i' && head(3) == 'n'
+
+  /** `--format auto`: does the first file under `path` (a file, or a
+    * rotated directory probed by its name-first file — binlog
+    * directories are homogeneous by contract) open with the magic?
+    * Reads 4 bytes of one file through the Hadoop filesystem. */
+  def isBinlog(spark: SparkSession, path: String): Boolean =
+    graft.cdc.GtidPrune.listFiles(spark, path).headOption
+      .exists(f => hasMagic(graft.cdc.GtidPrune.readHead(spark, f, 4)))
+
   /** Header-only read of a file's PREVIOUS_GTIDS_LOG_EVENT (type 35):
     * the GTID set executed BEFORE this file, which MySQL writes right
     * after the FDE on every 5.6+ binlog. Walks only the leading
@@ -263,8 +267,7 @@ object BinlogBinary {
     * the header is absent or malformed — callers must then treat the
     * file's content as unknown and scan it normally. */
   def headerPrevGtids(bytes: Array[Byte]): Option[graft.cdc.GtidSet.Set] = try {
-    if (bytes.length < 4 || bytes(0) != 0xFE.toByte || bytes(1) != 'b' ||
-        bytes(2) != 'i' || bytes(3) != 'n') return None
+    if (!hasMagic(bytes)) return None
     var off = 4
     var checksumLen = 0
     var scanned = 0
@@ -321,7 +324,19 @@ object BinlogBinary {
   } catch { case _: ArrayIndexOutOfBoundsException |
                  _: StringIndexOutOfBoundsException => None }
 
-  /** @param ddlOnly skip rows-event body decode entirely (the
+  /** Decode one binlog file's bytes into change events. Eager per
+    * file (a rotated binlog file is bounded by rotate size — the
+    * task already holds the bytes).
+    *
+    * `zone` is the zone used to render header datetimes (and thus what
+    * `--start/stop-datetime` filters compare against). Real
+    * `mysqlbinlog` prints the SERVER's local time; the text path
+    * captures that output verbatim, so to match it on a non-UTC server
+    * pass that server's zone here (the batch and stream readers both
+    * wire the Spark session time zone, which defaults to UTC in this
+    * engine).
+    *
+    * @param ddlOnly skip rows-event body decode entirely (the
     *   dominant volume), emitting only DDL events — the schema-
     *   evolution timeline parse of GTID-pruned files (the text FSM's
     *   ddlOnly twin). Compressed transaction payloads still replay
@@ -331,8 +346,7 @@ object BinlogBinary {
       zone: java.time.ZoneId = java.time.ZoneOffset.UTC,
       ddlOnly: Boolean = false): Seq[RawChange] = {
     val out = mutable.ArrayBuffer.empty[RawChange]
-    if (bytes.length < 4 || bytes(0) != 0xFE.toByte || bytes(1) != 'b' ||
-        bytes(2) != 'i' || bytes(3) != 'n') return out.toSeq
+    if (!hasMagic(bytes)) return out.toSeq
     var checksumLen = 0
     var seq = 0L
     // GTID framing: the last GTID_LOG_EVENT's uuid:gno, carried onto
@@ -829,67 +843,14 @@ object BinlogBinary {
   }
 
   /** Binary binlog files → change-event DataFrame with the same schema
-    * as `CdcJob.parse` (file/seq/positions/ts/db/table/op/images/ddl).
-    * `binaryFile` keeps the per-file-task parallelism contract: a
-    * rotated binlog file is the unit of work at any scale. */
+    * as `CdcJob.parse`, through the shared batch reader
+    * (`CdcJob.read`): one `binaryFile` task per rotated file. */
   def parse(spark: SparkSession, path: String,
       includeDdl: Boolean = false): DataFrame =
-    parsePaths(spark, Seq(path), includeDdl)
+    CdcJob.read(spark, Seq(path), binary = true, includeDdl)
 
-  private[graft] def parsePaths(spark: SparkSession, paths: Seq[String],
-      includeDdl: Boolean, ddlOnly: Boolean = false): DataFrame = {
-    import spark.implicits._
-    if (paths.isEmpty)
-      return CdcJob.projectEvents(spark.emptyDataset[graft.cdc.RawChange].toDF())
-    // header datetimes render in the session zone (see parseBytes doc)
-    val zoneId = spark.conf.get("spark.sql.session.timeZone",
-      java.time.ZoneId.systemDefault().getId)
-    CdcJob.projectEvents(
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*")
-        .load(paths: _*)
-        .select(col("path"), col("content"))
-        .as[(String, Array[Byte])]
-        .flatMap { case (file, bytes) =>
-          parseBytes(file, bytes, includeDdl, java.time.ZoneId.of(zoneId),
-            ddlOnly) }
-        .toDF())
-  }
-
-  /** Full binary-input pipeline: parse → filter → render — the
-    * binary-source twin of `CdcJob.run`, including its GTID file-level
-    * pruning (GtidPrune): with --include-gtids, files whose
-    * PREVIOUS_GTIDS headers prove them disjoint are never decoded. */
+  /** `CdcJob.run` with the binary decoder forced (`--format binary`). */
   def run(spark: SparkSession, path: String,
-      catalog: DataFrame, cfg: graft.cdc.CdcConfig): DataFrame = {
-    // --evolve-schema parity with CdcJob.run (r14 fix: the binary
-    // batch path used to IGNORE the flag): the parse must see DDL,
-    // timelines fold pre-filter — including the DDL of GTID-pruned
-    // files, via the rows-skipping ddlOnly decode — and DDL leaves
-    // the output again unless --include-ddl asked for it.
-    val parseDdl = cfg.includeDdl || cfg.evolveSchema
-    val (events, prunedOut) = cfg.includeGtids match {
-      case Some(spec) =>
-        val retained = graft.cdc.GtidPrune.prune(spark, path, spec)
-        val all = graft.cdc.GtidPrune.listFiles(spark, path).map(_.toString)
-        (parsePaths(spark, retained, parseDdl),
-          all.filterNot(retained.toSet))
-      case None => (parse(spark, path, parseDdl), Nil)
-    }
-    val evolved =
-      if (cfg.evolveSchema) {
-        val timelineEvents =
-          if (prunedOut.isEmpty) events
-          else events.unionByName(
-            parsePaths(spark, prunedOut, includeDdl = true, ddlOnly = true)
-              .filter(col("op") === "ddl"))
-        Some(graft.cdc.SchemaEvolve.timelines(timelineEvents, catalog))
-      } else None
-    val filtered = CdcJob.applyFilters(events, cfg)
-    val outEvents =
-      if (cfg.evolveSchema && !cfg.includeDdl)
-        filtered.filter(col("op") =!= "ddl")
-      else filtered
-    CdcJob.render(outEvents, catalog, cfg, evolved = evolved)
-  }
+      catalog: DataFrame, cfg: graft.cdc.CdcConfig): DataFrame =
+    CdcJob.run(spark, path, catalog, cfg.copy(format = "binary"))
 }

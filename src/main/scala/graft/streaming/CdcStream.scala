@@ -1,46 +1,88 @@
 package graft.streaming
 
-import graft.cdc.{BinlogFsm, CdcConfig, CdcJob, SchemaEvolve}
+import graft.cdc.{CdcConfig, CdcJob, GtidSet, SchemaEvolve}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
-/** Streaming CDC (SURVEY.md §3.4 streaming variant): watch a binlog
-  * drop directory, parse each arriving file with the same FSM as the
-  * batch path, render, and hand ordered micro-batches to a sink
-  * callback (`foreachBatch` — e.g. apply to a target DB, append to a
-  * log). One file = one complete ordered unit, matching binlog
-  * rotation, so per-file parse needs no cross-batch state.
+/** Streaming CDC (SURVEY.md §3.4 streaming variant): tail a rotating
+  * binlog drop directory with Structured Streaming — a capability the
+  * reference cannot express at all (it shells out to mysqlbinlog once,
+  * batch-only; main.py:90). Each newly rotated file — `mysqlbinlog -vv`
+  * text, or raw `.binlog` bytes with `binary = true` — becomes
+  * micro-batch input and runs through the SAME decode stage, filters,
+  * catalog join and SQL renderer as the batch path (`CdcJob.decode` /
+  * `applyFilters` / `renderUnordered`), so the two modes cannot drift.
+  *
+  * Semantics: the file is the parallelism AND ordering unit — binlogs
+  * rotate at a fixed size, so one file is one complete ordered unit and
+  * the per-file parse needs no cross-batch state (flatMap + stream-static
+  * broadcast join: append mode, no watermark, no state store). Rows
+  * carry (file, seq) for sinks that need total order; a GLOBAL sort is
+  * undefined on an unbounded stream, which is also why flashback (a
+  * full-stream reversal) is batch-only and rejected here. Three ways
+  * out: `changes` (rendered SQL for any append sink), `start` (ordered
+  * rendered micro-batches to a callback) and `startEvolved` (the same
+  * under `--evolve-schema`).
   */
 object CdcStream {
 
-  /** Streaming change-event frame from a drop directory.
-    * `maxFilesPerTrigger` is the batching grain: 1 = one rotated file
-    * per micro-batch (the c10 incremental-fold scenario), default 32
-    * bounds a catch-up burst. */
+  /** `binaryFile`'s schema: streaming file sources need it up front. */
+  private val BinaryFileSchema = StructType.fromDDL(
+    "path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
+
+  private def requireForward(cfg: CdcConfig): Unit =
+    require(!cfg.flashback,
+      "flashback reverses the whole stream and needs its end: batch-only " +
+        "(CdcJob.run); a stream has no final event to start from")
+
+  /** The stream reader: a streaming change-event frame from a drop
+    * directory. `maxFilesPerTrigger` is the batching grain: 1 = one
+    * rotated file per micro-batch (the c10 incremental-fold scenario),
+    * default 32 bounds a catch-up burst. `includeGtids`: a file whose
+    * PREVIOUS_GTIDS header proves the whole set executed before it
+    * is skipped at header cost during catch-up (the stream's twin of
+    * GtidPrune's seek); events outside the set still need
+    * `applyFilters`. */
   def events(spark: SparkSession, dir: String,
       includeDdl: Boolean = false,
-      maxFilesPerTrigger: Int = 32): DataFrame = {
-    import spark.implicits._
-    CdcJob.projectEvents(
-      spark.readStream
-        .option("wholetext", "true")
-        .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-        .text(dir)
-        .select(input_file_name().as("file"), col("value"))
-        .as[(String, String)]
-        .flatMap { case (file, text) =>
-          BinlogFsm.parse(file, text.linesIterator, includeDdl)
-        }
-        .toDF())
+      maxFilesPerTrigger: Int = 32,
+      binary: Boolean = false,
+      includeGtids: Option[String] = None): DataFrame = {
+    val src = spark.readStream
+      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
+    val files =
+      if (binary)
+        src.format("binaryFile").schema(BinaryFileSchema).load(dir)
+          .select(col("path"), col("content"))
+      else
+        src.option("wholetext", "true").text(dir)
+          .select(input_file_name().as("file"), col("value"))
+    CdcJob.decode(files, binary, includeDdl,
+      skipBefore = includeGtids.map(GtidSet.parse))
+  }
+
+  /** Rendered SQL as an unbounded append stream over `dir`.
+    * Start with `.writeStream` (any append sink); order within a file
+    * is emission order, cross-file order = the `file` column. */
+  def changes(spark: SparkSession, dir: String, catalog: DataFrame,
+      cfg: CdcConfig = CdcConfig(), binary: Boolean = false): DataFrame = {
+    requireForward(cfg)
+    val evs = events(spark, dir, cfg.includeDdl, binary = binary,
+      includeGtids = cfg.includeGtids)
+    CdcJob.renderUnordered(CdcJob.applyFilters(evs, cfg), catalog, cfg)
   }
 
   /** Start the pipeline; each micro-batch arrives at `sink` rendered
     * and ordered (file, seq). */
   def start(spark: SparkSession, dir: String, catalog: DataFrame,
-      cfg: CdcConfig = CdcConfig(), checkpoint: String)(
+      cfg: CdcConfig = CdcConfig(), checkpoint: String,
+      binary: Boolean = false)(
       sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    val evs = CdcJob.applyFilters(events(spark, dir, cfg.includeDdl), cfg)
+    requireForward(cfg)
+    val evs = CdcJob.applyFilters(events(spark, dir, cfg.includeDdl,
+      binary = binary, includeGtids = cfg.includeGtids), cfg)
     evs.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime("1 second"))
@@ -94,49 +136,17 @@ object CdcStream {
     * is cached for the callback's scope and unpersisted after). */
   def startEvolved(spark: SparkSession, dir: String, catalog: DataFrame,
       cfg: CdcConfig = CdcConfig(), checkpoint: String,
-      maxFilesPerTrigger: Int = 32)(
-      sink: (DataFrame, Long) => Unit): StreamingQuery =
-    startEvolvedFrom(spark,
-      events(spark, dir, includeDdl = true, maxFilesPerTrigger),
-      catalog, cfg, checkpoint)(sink)
-
-  /** [[startEvolved]] over a RAW `.binlog` drop directory — the
-    * binary-source twin (decode via `sources.BinlogBinary`, same
-    * timeline state machine and render). */
-  def startEvolvedBinary(spark: SparkSession, dir: String,
-      catalog: DataFrame, cfg: CdcConfig = CdcConfig(), checkpoint: String,
-      maxFilesPerTrigger: Int = 32)(
+      maxFilesPerTrigger: Int = 32, binary: Boolean = false)(
       sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    import spark.implicits._
-    val binarySchema = org.apache.spark.sql.types.StructType.fromDDL(
-      "path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
-    val evs = CdcJob.projectEvents(
-      spark.readStream
-        .format("binaryFile")
-        .schema(binarySchema)
-        .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-        .load(dir)
-        .select(col("path"), col("content"))
-        .as[(String, Array[Byte])]
-        .flatMap { case (file, bytes) =>
-          graft.sources.BinlogBinary.parseBytes(file, bytes, includeDdl = true)
-        }
-        .toDF())
-    startEvolvedFrom(spark, evs, catalog, cfg, checkpoint)(sink)
-  }
-
-  private def startEvolvedFrom(spark: SparkSession, evs: DataFrame,
-      catalog: DataFrame, cfg: CdcConfig, checkpoint: String)(
-      sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    require(!cfg.flashback,
-      "flashback reverses the whole stream and needs its end: batch-only")
+    requireForward(cfg)
+    // no GTID header skip: a skipped file's DDL would be missing from
+    // the timeline
+    val evs = events(spark, dir, includeDdl = true, maxFilesPerTrigger, binary)
     val base = SchemaEvolve.baseOf(catalog)
     val ddlAcc = scala.collection.mutable.ArrayBuffer
       .empty[(String, Long, String, String)]
     // filters apply INSIDE the batch callback, after the DDL collect:
-    // the timeline folds over the PRE-filter stream — user filters
-    // narrow the output, never the schema history events resolve
-    // against (same rule as CdcJob.run's batch fold)
+    // the timeline folds over the PRE-filter stream (CdcJob.outputEvents)
     evs
       .writeStream
       .option("checkpointLocation", checkpoint)
@@ -152,10 +162,8 @@ object CdcStream {
             .map(r => (r.getString(0), r.getLong(1),
               r.getString(2), r.getString(3)))
           val tl = SchemaEvolve.foldDdls(base, ddlAcc.toSeq)
-          val filtered = CdcJob.applyFilters(b, cfg)
-          val out = if (cfg.includeDdl) filtered
-            else filtered.filter(col("op") =!= "ddl")
-          sink(CdcJob.renderUnordered(out, catalog, cfg,
+          sink(CdcJob.renderUnordered(
+            CdcJob.outputEvents(b, cfg, timeline = true), catalog, cfg,
             evolved = Some(tl)), id)
         } finally b.unpersist()
       }

@@ -254,7 +254,7 @@ class CdcJobSpec extends AnyFunSuite {
     val (_, _, cfg, _, outPq, _) = CdcMain.parseArgs(Array(
       "--binlog", src, "--sql-type", "insert", "--output-parquet", dir))
     assert(outPq.contains(dir) && cfg.sqlTypes == Seq("insert"))
-    CdcMain.writeEventLake(spark, src, binary = false, cfg, dir)
+    CdcMain.writeEventLake(CdcJob.events(spark, src, Catalog.fixture(spark), cfg)._1, dir)
     val lake = spark.read.parquet(dir)
     val want = CdcJob.applyFilters(CdcJob.parse(spark, src), cfg)
     assert(lake.count() == want.count() && lake.count() > 0)

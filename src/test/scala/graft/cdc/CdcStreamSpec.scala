@@ -1,6 +1,7 @@
 package graft.cdc
 
 import java.nio.file.{Files, Paths}
+import graft.streaming.CdcStream
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -173,8 +174,8 @@ class CdcStreamSpec extends AnyFunSuite {
     Files.write(dir.resolve("binlog.000001"),
       graft.sources.BinlogBinaryFixture.render(evs)._1)
     val cfg = CdcConfig(includeGtids = Some(s"$sid:2-4:7"))
-    val q = CdcStream.changesBinary(spark, dir.toString,
-      Catalog.fixture(spark), cfg)
+    val q = CdcStream.changes(spark, dir.toString,
+      Catalog.fixture(spark), cfg, binary = true)
       .writeStream.format("memory").queryName("gtidstream")
       .outputMode("append").start()
     try {
@@ -202,7 +203,8 @@ class CdcStreamSpec extends AnyFunSuite {
       BinlogBinaryFixture.Delete(1, "b", Some(2.5)))
     val (bytes, _) = BinlogBinaryFixture.render(events)
     Files.write(dir.resolve("binlog.000000"), bytes)
-    val q = CdcStream.changesBinary(spark, dir.toString, Catalog.fixture(spark))
+    val q = CdcStream.changes(spark, dir.toString, Catalog.fixture(spark),
+      binary = true)
       .writeStream.format("memory").queryName("cdcsb")
       .outputMode("append").start()
     try {
@@ -221,6 +223,37 @@ class CdcStreamSpec extends AnyFunSuite {
       q.stop()
       spark.catalog.dropTempView("cdcsb")
     }
+  }
+
+  test("binary stream renders header datetimes in the session time zone, like batch") {
+    import graft.sources.{BinlogBinary, BinlogBinaryFixture}
+    val dir = Files.createTempDirectory("graft_cdcstream_tz")
+    Files.write(dir.resolve("binlog.000000"), BinlogBinaryFixture.render(Seq(
+      BinlogBinaryFixture.Insert(1, "a", Some(1.5)),
+      BinlogBinaryFixture.Delete(1, "a", Some(1.5))))._1)
+    def batchSql(): Seq[String] =
+      BinlogBinary.run(spark, dir.toString, Catalog.fixture(spark), CdcConfig())
+        .select("sql").collect().map(_.getString(0)).toSeq
+    val key = "spark.sql.session.timeZone"
+    val (streamed, batch) =
+      try {
+        spark.conf.set(key, "Asia/Kolkata")
+        val q = CdcStream.changes(spark, dir.toString, Catalog.fixture(spark),
+          binary = true)
+          .writeStream.format("memory").queryName("cdcs_tz")
+          .outputMode("append").start()
+        try {
+          q.processAllAvailable()
+          (spark.table("cdcs_tz").orderBy("file", "seq").select("sql")
+            .collect().map(_.getString(0)).toSeq, batchSql())
+        } finally {
+          q.stop()
+          spark.catalog.dropTempView("cdcs_tz")
+        }
+      } finally spark.conf.set(key, "UTC")
+    assert(streamed.nonEmpty && streamed == batch)
+    // the zone is visible: the UTC rendering carries other datetimes
+    assert(batchSql() != batch)
   }
 
   test("checkpoint restart: a killed query resumes exactly-once, no replay, no loss") {

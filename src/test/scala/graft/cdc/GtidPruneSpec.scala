@@ -1,6 +1,7 @@
 package graft.cdc
 
 import graft.sources.{BinlogBinary, BinlogBinaryFixture}
+import graft.streaming.CdcStream
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -120,6 +121,12 @@ class GtidPruneSpec extends AnyFunSuite {
       CdcConfig(includeGtids = Some(s"$Sid:5")))
       .select("sql").collect().map(_.getString(0))
     assert(got.length == 1 && got(0).contains("INSERT"))
+    // the CLI's path: CdcJob.run with the default `--format auto` sniffs
+    // the magic, then prunes and decodes exactly like the binary entry
+    val auto = CdcJob.run(spark, dir, cat,
+      CdcConfig(includeGtids = Some(s"$Sid:5")))
+      .select("sql").collect().map(_.getString(0))
+    assert(auto.toSeq == got.toSeq)
     // a gno beyond every header prunes to just the (clean) last file,
     // where the event filter then drops everything — no decode of the
     // poisoned files, no rows, no error
@@ -153,8 +160,8 @@ class GtidPruneSpec extends AnyFunSuite {
     // S = 1-2 is fully executed before BOTH files (P₁ = 1-3, P₂ = 1-5):
     // the stream proves each file stale from its header alone and never
     // decodes a body — including f1's poisoned one
-    val q = CdcStream.changesBinary(spark, dir.toString, Catalog.fixture(spark),
-      CdcConfig(includeGtids = Some(s"$Sid:1-2")))
+    val q = CdcStream.changes(spark, dir.toString, Catalog.fixture(spark),
+      CdcConfig(includeGtids = Some(s"$Sid:1-2")), binary = true)
       .writeStream.format("memory").queryName("gtid_catchup").start()
     try {
       q.processAllAvailable() // would throw (poisoned f1) without the skip
@@ -162,8 +169,8 @@ class GtidPruneSpec extends AnyFunSuite {
     } finally q.stop()
     // and a set NOT fully executed before f1 must decode it (and trip) —
     // the skip is exactly S ⊆ P, nothing looser
-    val q2 = CdcStream.changesBinary(spark, dir.toString, Catalog.fixture(spark),
-      CdcConfig(includeGtids = Some(s"$Sid:4-6")))
+    val q2 = CdcStream.changes(spark, dir.toString, Catalog.fixture(spark),
+      CdcConfig(includeGtids = Some(s"$Sid:4-6")), binary = true)
       .writeStream.format("memory").queryName("gtid_trip").start()
     try {
       intercept[org.apache.spark.sql.streaming.StreamingQueryException] {

@@ -583,12 +583,12 @@ class BinlogBinarySpec extends AnyFunSuite {
     val bdir = java.nio.file.Files.createTempDirectory("graft_sniff_bin")
     java.nio.file.Files.write(bdir.resolve("binlog.000001"), bin)
     // directory of raw .binlog files AND a single raw file both sniff binary
-    assert(CdcMain.sniffBinary(spark, bdir.toString))
-    assert(CdcMain.sniffBinary(spark, bdir.resolve("binlog.000001").toString))
+    assert(BinlogBinary.isBinlog(spark, bdir.toString))
+    assert(BinlogBinary.isBinlog(spark, bdir.resolve("binlog.000001").toString))
     // mysqlbinlog -vv text sniffs text
     val tdir = java.nio.file.Files.createTempDirectory("graft_sniff_txt")
     java.nio.file.Files.writeString(tdir.resolve("binlog.000001.txt"), text)
-    assert(!CdcMain.sniffBinary(spark, tdir.toString))
+    assert(!BinlogBinary.isBinlog(spark, tdir.toString))
     // flag surface: default auto, explicit values parse, junk rejected
     assert(CdcMain.parseArgs(Array("--binlog", "x"))._3.format == "auto")
     assert(CdcMain.parseArgs(
@@ -640,8 +640,8 @@ class BinlogBinarySpec extends AnyFunSuite {
     val cfg = CdcConfig(evolveSchema = true)
     var acc = Vector.empty[(String, Long, String)]
     val cp = java.nio.file.Files.createTempDirectory("graft_bsevolve_cp").toString
-    val q = graft.streaming.CdcStream.startEvolvedBinary(
-      spark, dir.toString, cat, cfg, cp, maxFilesPerTrigger = 1) {
+    val q = graft.streaming.CdcStream.startEvolved(
+      spark, dir.toString, cat, cfg, cp, maxFilesPerTrigger = 1, binary = true) {
       (b: org.apache.spark.sql.DataFrame, _: Long) =>
         acc ++= b.select("file", "seq", "sql").collect()
           .map(r => (r.getString(0), r.getLong(1), r.getString(2)))
